@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import dataclasses
 import json
+import os
+import warnings
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -146,3 +148,19 @@ class EngineConfig:
 
 
 DEFAULT_CONFIG = EngineConfig()
+
+
+def env_int(name: str, default: int, minimum: int = 0) -> int:
+    """Integer tuning knob from the environment: unset -> ``default``;
+    a malformed value warns and falls back to ``default`` (a typo in a
+    knob must not crash an import); values below ``minimum`` clamp to
+    it."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        warnings.warn(f"{name}={raw!r} is not an integer; using {default}", stacklevel=2)
+        return default
+    return max(minimum, value)

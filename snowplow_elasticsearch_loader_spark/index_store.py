@@ -156,16 +156,11 @@ class InvertedIndex:
         return self._t("docstats")
 
     def corpus(self) -> tuple[int, float]:
-        target = self._resolve("corpus")
-        if _is_local(target):
-            import glob
-
-            import pyarrow.parquet as pq
-
-            files = sorted(glob.glob(os.path.join(target, "*.parquet")))
-            if files:
-                t = pq.read_table(files[0]).to_pydict()
-                return int(t["n_docs"][0]), float(t["avgdl"][0])
+        tbl = read_local_parquet(
+            local_parquet_files(self._resolve("corpus")), ("n_docs", "avgdl")
+        )
+        if tbl is not None and tbl.num_rows:
+            return int(tbl["n_docs"][0].as_py()), float(tbl["avgdl"][0].as_py())
         row = self._t("corpus").collect()[0]
         return int(row["n_docs"]), float(row["avgdl"])
 
@@ -182,24 +177,11 @@ class InvertedIndex:
         job's scheduling. Non-local paths keep the partition-pruned
         Spark scan — at true corpus scale the dictionary lives with the
         index, not on the driver."""
-        target = self._resolve("termdict")
-        if _is_local(target):
-            try:
-                import glob
-
-                import pyarrow.compute as pc
-                import pyarrow.dataset as pads
-
-                files = sorted(
-                    glob.glob(os.path.join(target, "**", "*.parquet"), recursive=True)
-                )
-                if files:
-                    tbl = pads.dataset(files).to_table(
-                        columns=list(cols), filter=pc.field("term").isin(terms)
-                    )
-                    return tbl.to_pylist()
-            except Exception:
-                pass
+        tbl = read_local_parquet(
+            local_parquet_files(self._resolve("termdict")), cols, terms
+        )
+        if tbl is not None:
+            return tbl.to_pylist()
         rows = (
             self.termdict.filter(F.col("term").isin(terms)).select(*cols).collect()
         )
@@ -287,6 +269,39 @@ def _is_local(path: str) -> bool:
         except Exception:
             fs = "file:///"
     return fs.startswith("file:")
+
+
+def local_parquet_files(path: str) -> list[str] | None:
+    """Sorted parquet files under ``path``, through its partition dirs,
+    when ``path`` is a directory on the local filesystem; None when it
+    is not, which tells the caller to read through Spark."""
+    if not (_is_local(path) and os.path.isdir(path)):
+        return None
+    import glob
+
+    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+def read_local_parquet(files: list[str] | None, columns, terms=None):
+    """One pyarrow read of ``columns`` from local parquet ``files``,
+    filtered to ``term IN terms`` when given (row-group statistics prune
+    term-sorted files tightly). A small driver-side read this way costs
+    milliseconds where a Spark scan + collect pays a whole job.
+
+    Returns None when there are no files or the read fails (say, a file
+    retired by a concurrent compaction's GC); the caller then takes its
+    Spark read, which is also the only path for non-local indexes."""
+    if not files:
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    flt = None if terms is None else pc.field("term").isin(list(terms))
+    try:
+        return pads.dataset(files).to_table(columns=list(columns), filter=flt)
+    except (OSError, pa.ArrowException):
+        return None
 
 
 def _pa_schema(schema: T.StructType):

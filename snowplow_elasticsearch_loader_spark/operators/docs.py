@@ -28,7 +28,6 @@ any parallelism level, no global shuffle to one task, all JVM-side.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -36,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..config import EngineConfig, DEFAULT_CONFIG
+from ..config import EngineConfig, DEFAULT_CONFIG, env_int
 from ..functions.analyze import tokens_col
 
 #: minimum rows per ranking bucket in ``assign_doc_ids``'s sampled
@@ -44,7 +43,7 @@ from ..functions.analyze import tokens_col
 #: inputs below ~20k rows/bucket never benefit from the 4x-cores bucket
 #: fan-out and pay its per-task scheduling overhead instead. Ranks are
 #: bucket-invariant, so this knob can never change output values.
-_RANK_ROWS_PER_BUCKET = int(os.environ.get("SPARK_GRAFT_RANK_ROWS_PER_BUCKET", "20000"))
+_RANK_ROWS_PER_BUCKET = env_int("SPARK_GRAFT_RANK_ROWS_PER_BUCKET", 20000, minimum=1)
 
 BADROW_SCHEMA = T.StructType(
     [

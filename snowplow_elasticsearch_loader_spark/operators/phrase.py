@@ -34,7 +34,7 @@ from ..functions import codec
 from ..functions.analyze import tokenize_text
 from .bm25 import idf as idf_fn
 from .index_build import decode_positions
-from .wand import RESULT_SCHEMA, _exact_scores, _empty_result
+from .wand import RESULT_SCHEMA, _exact_scores, _empty_result, empty_topk
 
 #: positions fit 20 bits (limits.max_tokens_per_turn <= 100k < 2^17);
 #: doc ids fit the remaining 43 bits at 10^12-turn scale
@@ -212,11 +212,8 @@ def phrase_topk(
             w = float(len(o)) * idf_fn(n_docs, df_map[t])
             qrows.append((qid, t, w, o))
             live_terms.add(t)
-    empty = spark.createDataFrame([], schema=RESULT_SCHEMA).select(
-        "query_id", F.lit(1).alias("rank"), "doc_id", "score"
-    ).limit(0)
     if not qrows:
-        return empty
+        return empty_topk(spark)
     queries_spec: dict[str, dict] = {}
     for qid, t, w, offs in qrows:
         queries_spec.setdefault(qid, {"m": m_by_query[qid], "terms": {}})[

@@ -1,35 +1,53 @@
-"""Warm query sessions: amortize per-query driver work.
+"""Warm query sessions: point queries on a local index run no Spark job.
 
 The reference's query surface is a stateless HTTP ``_search`` against
-an always-warm ES process; a cold Spark query pays per-job scheduling
-instead. ``QueryEngine`` recovers most of that gap for repeated
-queries:
+an always-warm ES process; a Spark query pays per-job scheduling
+instead. ``QueryEngine`` takes that cost off the point-query path:
 
-- the term dictionary is collected ONCE into a driver-side dict
-  (term -> (df, bucket)); term lookup becomes a hash probe instead of
-  a Spark job. For dictionaries too large to collect (true web scale),
-  ``warm=False`` keeps the per-query filtered lookup job;
-- the blocks scan stays lazy/pruned per query (partition + predicate
-  pushdown), so only ONE Spark job runs per query;
-- many queries in one call share everything (the batch path the bench
-  reports separately).
+- opening reads the corpus stats and the term dictionary (term -> df,
+  bucket, block count) into the driver, so term lookup is a hash
+  probe. A local index is read with pyarrow, so opening runs no job.
+  Dictionaries too large to hold (``warm=False``, or past
+  ``SPARK_GRAFT_WARM_MAX_TERMS`` rows) keep a filtered per-query
+  lookup instead;
+- a call whose candidate blocks number at most
+  ``SPARK_GRAFT_DRIVER_EVAL_MAX_BLOCKS`` is answered in the driver,
+  warm or cold, serving or not: its blocks are gathered (pyarrow over
+  the named bucket dirs for a local index, one pruned Spark scan
+  otherwise), decoded once into a per-term LRU cache and scored by the
+  same block-max WAND arithmetic as the distributed evaluator. The
+  result is a local DataFrame; collecting it runs no job. This is the
+  search-engine coordinator pattern (shards return postings, the
+  coordinator merges);
+- a bigger call falls back to the distributed per-range WAND: one
+  Spark job for all of its queries;
+- ``search_phrase`` always runs as one Spark job per call.
 """
 
 from __future__ import annotations
 
 import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..config import DEFAULT_CONFIG, EngineConfig
-from ..index_store import InvertedIndex
+from ..config import DEFAULT_CONFIG, EngineConfig, env_int
+from ..index_store import InvertedIndex, local_parquet_files, read_local_parquet
 from .bm25 import analyze_queries, idf as idf_fn
-from .wand import RESULT_SCHEMA, WAND_INPUT_COLS, make_wand_evaluator
+from .wand import (
+    RESULT_SCHEMA,
+    TOPK_SCHEMA,
+    WAND_INPUT_COLS,
+    empty_topk,
+    make_wand_evaluator,
+)
 
 
 class QueryEngine:
+    _TERM_COLS = ("term", "df", "term_bucket", "block_count")
+
     def __init__(
         self,
         idx: InvertedIndex,
@@ -38,11 +56,15 @@ class QueryEngine:
         cache_blocks: bool = False,
     ):
         """``cache_blocks=True`` pins the posting blocks in executor
-        memory (deserialized) — the analog of ES keeping hot segments
-        in page cache. Right for a serving deployment whose index fits
-        the cluster's storage memory; leave off for one-shot batch
-        queries or when blocks >> memory (the scan is partition-pruned
-        either way)."""
+        memory (deserialized) for the paths that still scan them with
+        Spark: the over-cap fallback, a non-local index and
+        ``search_phrase`` (the analog of ES keeping hot segments in page
+        cache), and tunes the session for tiny per-query jobs. It does
+        not select the evaluator: point queries on a local index read
+        their blocks with pyarrow either way. Right for a serving
+        deployment whose index fits the cluster's storage memory; leave
+        off for one-shot batch queries or when blocks >> memory (the
+        scan is partition-pruned either way)."""
         self.idx = idx
         # the serving paths scan raw blocks for latency (no per-row
         # tombstone anti-join) and would resurface deleted docs; like
@@ -55,7 +77,7 @@ class QueryEngine:
             )
         self.cfg = cfg or idx.cfg or DEFAULT_CONFIG
         self.n_docs, self.avgdl = idx.corpus()
-        self.blocks = idx.blocks
+        self._cache_blocks = cache_blocks
         if cache_blocks:
             # serving mode: point-query latency is driver-round-trip
             # bound, so skip AQE's per-shuffle replan and keep the tiny
@@ -64,118 +86,121 @@ class QueryEngine:
             spark = idx.spark
             spark.conf.set("spark.sql.adaptive.enabled", "false")
             spark.conf.set("spark.sql.shuffle.partitions", "8")
-            self.blocks = self.blocks.cache()
-        self._serving = cache_blocks
-        # coordinator-eval cap: a point query whose candidate posting
-        # blocks fit comfortably in the driver is answered by gathering
-        # them (one pruned scan job) and running the SAME numpy WAND
-        # evaluator in-process — no shuffle, no python-worker round
-        # trip, no window stage. This is the search-engine coordinator
-        # pattern (shards return postings, coordinator merges); bigger
-        # queries fall back to the distributed per-range path.
-        self.driver_eval_max_blocks = int(
-            os.environ.get("SPARK_GRAFT_DRIVER_EVAL_MAX_BLOCKS", "50000")
-        )
+        # coordinator-eval cap: a call whose candidate posting blocks
+        # fit comfortably in the driver is answered by gathering them
+        # and running the SAME numpy WAND evaluator in-process — no
+        # shuffle, no python-worker round trip, no window stage. Bigger
+        # calls fall back to the distributed per-range path.
+        self.driver_eval_max_blocks = env_int("SPARK_GRAFT_DRIVER_EVAL_MAX_BLOCKS", 50000)
         # per-term DECODED-postings cache (the ES node-query-cache
-        # analog): repeated hot terms skip the scan job entirely.
+        # analog): repeated hot terms skip the gather entirely.
         # LRU-evicted at ~256 MB of decoded posting arrays.
         self._block_cache: dict[str, object] = {}
         self._block_cache_bytes = 0
-        self.block_cache_max_bytes = int(
-            os.environ.get("SPARK_GRAFT_DRIVER_BLOCK_CACHE_MB", "256")
-        ) * (1 << 20)
-        #: per-bucket physical file listing for the local pyarrow gather
-        #: (point-query latency path); None until first use per bucket
-        self._bucket_files_cache: dict[int, list[str]] = {}
-        self._term_cache: dict[str, tuple[int, int, int]] | None = None
-        # warm-init bound (VERDICT r5 wrong #3): collecting the FULL
-        # term dictionary is only safe while it is dictionary-sized.
-        # A cheap driver-side row count gates the collect; above the
-        # cap the engine silently stays in filtered-lookup mode (the
-        # scale-safe path), instead of OOMing the driver on a web-scale
+        self.block_cache_max_bytes = env_int("SPARK_GRAFT_DRIVER_BLOCK_CACHE_MB", 256) * (1 << 20)
+        # a local blocks dir is listed once, grouped by its
+        # ``term_bucket=N`` partition dir; None for a non-local index,
+        # whose gathers go through Spark
+        blocks_dir = idx._resolve("blocks")
+        files = local_parquet_files(blocks_dir)
+        self._bucket_files: dict[str, list[str]] | None = None
+        if files is not None:
+            self._bucket_files = {}
+            for f in files:
+                part = os.path.relpath(f, blocks_dir).split(os.sep, 1)[0]
+                self._bucket_files.setdefault(part, []).append(f)
+        # warm-init bound (VERDICT r5 wrong #3): holding the FULL term
+        # dictionary is only safe while it is dictionary-sized; above
+        # the cap the engine stays in filtered-lookup mode (the
+        # scale-safe path) instead of OOMing the driver on a web-scale
         # vocabulary.
-        self.warm_max_terms = int(
-            os.environ.get("SPARK_GRAFT_WARM_MAX_TERMS", str(5_000_000))
-        )
-        if warm and self._termdict_rows_within(self.warm_max_terms):
-            rows = idx.termdict.select("term", "df", "term_bucket", "block_count").collect()
-            self._term_cache = {
-                r["term"]: (int(r["df"]), int(r["term_bucket"]), int(r["block_count"]))
-                for r in rows
-            }
-        if warm and cache_blocks:
-            self.blocks.count()  # materialize the cache up front
+        self.warm_max_terms = env_int("SPARK_GRAFT_WARM_MAX_TERMS", 5_000_000)
+        self._term_cache: dict[str, tuple[int, int, int]] | None = None
+        if warm:
+            self._term_cache = self._load_term_dict()
+            if cache_blocks and self._bucket_files is None:
+                self.blocks.count()  # materialize the cache up front
 
-    def _termdict_rows_within(self, cap: int) -> bool:
-        """True iff the term dictionary holds at most ``cap`` rows,
-        answered from parquet metadata where possible (local: pyarrow
-        footer num_rows, no data read; else one count() job — still
-        never a full-dictionary collect)."""
-        from ..index_store import _is_local
+    @cached_property
+    def blocks(self) -> DataFrame:
+        """The blocks table for the Spark paths, created on first use:
+        reading it infers the parquet schema, which is itself a job."""
+        blocks = self.idx.blocks
+        return blocks.cache() if self._cache_blocks else blocks
 
-        target = self.idx._resolve("termdict")
-        if _is_local(target) and os.path.isdir(target):
+    def _load_term_dict(self) -> dict[str, tuple[int, int, int]] | None:
+        """The whole term dictionary as term -> (df, bucket,
+        block_count), or None when it holds more than
+        ``warm_max_terms`` rows. A local dictionary is counted from
+        parquet footers and loaded with one pyarrow read; otherwise a
+        count() job gates a collect — never a full-dictionary collect
+        past the cap either way."""
+        cap = self.warm_max_terms
+        files = local_parquet_files(self.idx._resolve("termdict"))
+        if files:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
             try:
-                import glob
-
-                import pyarrow.parquet as pq
-
-                total = 0
-                for f in sorted(
-                    glob.glob(os.path.join(target, "**", "*.parquet"), recursive=True)
-                ):
-                    total += pq.ParquetFile(f).metadata.num_rows
-                    if total > cap:
-                        return False
-                return True
-            except Exception:
-                pass
-        return self.idx.termdict.limit(cap + 1).count() <= cap
+                n_terms = sum(pq.read_metadata(f).num_rows for f in files)
+            except (OSError, pa.ArrowException):
+                n_terms = None
+            if n_terms is not None:
+                if n_terms > cap:
+                    return None
+                tbl = read_local_parquet(files, self._TERM_COLS)
+                if tbl is not None:
+                    terms, *vals = (tbl[c].to_pylist() for c in self._TERM_COLS)
+                    return dict(zip(terms, zip(*vals)))
+        termdict = self.idx.termdict
+        if termdict.limit(cap + 1).count() > cap:
+            return None
+        rows = termdict.select(*self._TERM_COLS).collect()
+        return {
+            r["term"]: (int(r["df"]), int(r["term_bucket"]), int(r["block_count"]))
+            for r in rows
+        }
 
     def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         if self._term_cache is not None:
             return {t: self._term_cache[t] for t in terms if t in self._term_cache}
         # filtered lookup (the scale path past warm_max_terms): local
         # dirs answer from a pyarrow probe, remote from a pruned scan
-        rows = self.idx.lookup_terms(
-            terms, cols=("term", "df", "term_bucket", "block_count")
-        )
+        rows = self.idx.lookup_terms(terms, cols=self._TERM_COLS)
         return {
             r["term"]: (int(r["df"]), int(r["term_bucket"]), int(r["block_count"]))
             for r in rows
         }
 
     def search(self, queries: list[tuple[str, str]], k: int = 10) -> DataFrame:
-        """(query_id, rank, doc_id, score) — block-max WAND, one Spark
-        job per call regardless of query count.
+        """(query_id, rank, doc_id, score) — exact BM25 top-k.
 
-        Query weights are inlined as a LITERAL term -> entries map
-        rather than a broadcast-joined table: weights are driver-known
-        (warm term cache), so a point query pays no createDataFrame
-        round-trip and no broadcast-exchange stage — the latency path.
-        The batch path (wand.wand_topk) keeps the broadcast join, which
-        is the right shape when the query SET itself is large."""
-        spark = self.idx.spark
+        A call whose candidate blocks total at most
+        ``driver_eval_max_blocks`` is evaluated in the driver
+        (``_search_driver``); a bigger one runs the distributed
+        block-max WAND, one Spark job per call regardless of query
+        count.
+
+        The distributed path inlines query weights as a LITERAL term ->
+        entries map rather than a broadcast-joined table: weights are
+        driver-known, so a query pays no createDataFrame round-trip and
+        no broadcast-exchange stage. The batch path (wand.wand_topk)
+        keeps the broadcast join, which is the right shape when the
+        query SET itself is large."""
         qrows = analyze_queries(queries)
         terms = sorted({t for _, t, _ in qrows})
         tmap = self._lookup(terms)
-        total_blocks = sum(tmap[t][2] for t in terms if t in tmap)
-        if (
-            self._serving
-            and any(t in tmap for t in terms)
-            and total_blocks <= self.driver_eval_max_blocks
-        ):
+        hits = [t for t in terms if t in tmap]
+        if not hits:
+            return empty_topk(self.idx.spark)
+        if sum(tmap[t][2] for t in hits) <= self.driver_eval_max_blocks:
             return self._search_driver(qrows, tmap, k)
         qterm_rows = [
             (qid, t, float(qtf) * idf_fn(self.n_docs, tmap[t][0]))
             for qid, t, qtf in qrows
             if t in tmap
         ]
-        buckets = sorted({tmap[t][1] for _, t, _ in qrows if t in tmap})
-        if not qterm_rows:
-            return spark.createDataFrame([], schema=RESULT_SCHEMA).select(
-                "query_id", F.lit(1).alias("rank"), "doc_id", "score"
-            ).limit(0)
+        buckets = sorted({tmap[t][1] for t in hits})
         by_term: dict[str, list[tuple[str, float]]] = {}
         for qid, t, w in qterm_rows:
             by_term.setdefault(t, []).append((qid, w))
@@ -222,9 +247,9 @@ class QueryEngine:
 
     def _search_driver(self, qrows, tmap, k: int) -> DataFrame:
         """Coordinator fast path: gather the queries' candidate blocks
-        with ONE pruned (cached) scan job and evaluate the identical
-        numpy block-max WAND in the driver. Ranking (round to 6, desc
-        score, asc doc_id) mirrors the distributed path exactly.
+        (``_gather_blocks``) and evaluate the identical numpy block-max
+        WAND in the driver. Ranking (round to 6, desc score, asc doc_id)
+        mirrors the distributed path exactly.
 
         The per-term cache is a true LRU (hits refresh recency) and the
         CURRENT query's entries are held in a local dict before any
@@ -240,7 +265,6 @@ class QueryEngine:
         accounting uses the decoded array bytes."""
         import pandas as pd
 
-        spark = self.idx.spark
         hit_terms = sorted(t for t in {t for _, t, _ in qrows} if t in tmap)
         needed = set(hit_terms)
         qdecs: dict[str, tuple] = {}
@@ -275,12 +299,6 @@ class QueryEngine:
                 if self._block_cache_bytes + nbytes <= self.block_cache_max_bytes:
                     self._block_cache[t] = (dec, nbytes)
                     self._block_cache_bytes += nbytes
-        if not any(qdecs[t][0].size for t in hit_terms):
-            return (
-                spark.createDataFrame([], schema=RESULT_SCHEMA)
-                .select("query_id", F.lit(1).alias("rank"), "doc_id", "score")
-                .limit(0)
-            )
         by_query: dict[str, dict[str, float]] = {}
         for qid, t, qtf in qrows:
             if t in tmap:
@@ -301,11 +319,7 @@ class QueryEngine:
                 )
             )
         if not frames:
-            return (
-                spark.createDataFrame([], schema=RESULT_SCHEMA)
-                .select("query_id", F.lit(1).alias("rank"), "doc_id", "score")
-                .limit(0)
-            )
+            return empty_topk(self.idx.spark)
         res = pd.concat(frames, ignore_index=True)
         res["score"] = res["score"].round(6)
         res = res.sort_values(
@@ -313,9 +327,8 @@ class QueryEngine:
         ).reset_index(drop=True)
         res["rank"] = res.groupby("query_id").cumcount() + 1
         res = res[res["rank"] <= k]
-        return spark.createDataFrame(
-            res[["query_id", "rank", "doc_id", "score"]],
-            schema="query_id string, rank int, doc_id long, score double",
+        return self.idx.spark.createDataFrame(
+            res[["query_id", "rank", "doc_id", "score"]], schema=TOPK_SCHEMA
         )
 
     _GATHER_COLS = ("term", "doc_count", "docs_varint", "tfs_varint", "dls_varint")
@@ -323,47 +336,26 @@ class QueryEngine:
     def _gather_blocks(self, buckets: list[int], terms: list[str]):
         """Candidate-block gather for the coordinator path.
 
-        Local index dirs skip Spark entirely (VERDICT r3 #7): the
+        A local index skips Spark entirely (VERDICT r3 #7): the
         driver-side termdict already names the buckets, so the gather is
-        a pyarrow dataset read over exactly those buckets' files with a
-        term-isin filter — parquet row-group statistics prune tightly
-        because blocks within a range are written in term order. No job
-        scheduling, no Catalyst planning, no executor round-trip on the
-        point-query latency path. Non-local paths (HDFS/object store)
-        keep the partition-pruned Spark scan."""
-        blocks_dir = self.idx._resolve("blocks")
-        from ..index_store import _is_local
+        one pyarrow read over exactly those buckets' files (listed at
+        open) with a term-isin filter — parquet row-group statistics
+        prune tightly because blocks within a range are written in term
+        order. No job scheduling, no Catalyst planning, no executor
+        round-trip on the point-query latency path. Non-local paths
+        (HDFS/object store), and a local read that fails, take the
+        partition-pruned Spark scan."""
+        if self._bucket_files is not None:
+            paths = [
+                f for b in buckets for f in self._bucket_files.get(f"term_bucket={b}", ())
+            ]
+            if not paths:
+                import pandas as pd
 
-        if _is_local(blocks_dir) and os.path.isdir(blocks_dir):
-            try:
-                import pyarrow.compute as pc
-                import pyarrow.dataset as pads
-
-                paths: list[str] = []
-                for b in buckets:
-                    files = self._bucket_files_cache.get(b)
-                    if files is None:
-                        import glob
-
-                        files = sorted(
-                            glob.glob(
-                                os.path.join(blocks_dir, f"term_bucket={b}", "**", "*.parquet"),
-                                recursive=True,
-                            )
-                        )
-                        self._bucket_files_cache[b] = files
-                    paths.extend(files)
-                if not paths:
-                    import pandas as pd
-
-                    return pd.DataFrame(columns=list(self._GATHER_COLS))
-                tbl = pads.dataset(paths).to_table(
-                    columns=list(self._GATHER_COLS),
-                    filter=pc.field("term").isin(terms),
-                )
+                return pd.DataFrame(columns=list(self._GATHER_COLS))
+            tbl = read_local_parquet(paths, self._GATHER_COLS, terms)
+            if tbl is not None:
                 return tbl.to_pandas()
-            except Exception:
-                pass  # fall back to the Spark scan below
         return (
             self.blocks.filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(terms))

@@ -66,6 +66,27 @@ RESULT_SCHEMA = T.StructType(
 )
 
 
+#: ranked top-k output of every search operator, parsed once at import
+#: (a DDL string is re-parsed through the JVM on every createDataFrame)
+TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.StringType()),
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
+
+def empty_topk(spark) -> DataFrame:
+    """An empty ranked result. Built from an Arrow table, so it is a
+    local relation: collecting it runs no Spark job (an empty Python
+    list would go through a parallelized RDD)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(TOPK_SCHEMA).empty_table(), TOPK_SCHEMA)
+
+
 def _empty_result() -> pd.DataFrame:
     return pd.DataFrame(
         {
@@ -286,10 +307,7 @@ def wand_topk(
         if t in df_map
     ]
     if not qterm_rows:
-        empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-        return empty.select(
-            "query_id", F.lit(1).alias("rank"), "doc_id", "score"
-        ).limit(0)
+        return empty_topk(spark)
     queries_w: dict[str, dict[str, float]] = {}
     for qid, t, w in qterm_rows:
         queries_w.setdefault(qid, {})[t] = w

@@ -37,6 +37,26 @@ def test_config_rejects_unknown_and_invalid():
         EngineConfig.from_dict({"index": {"block_size": 1}}).validate()
 
 
+def test_env_int_knob_clamps_and_survives_malformed(monkeypatch):
+    """An integer env knob parsed at import must not crash the import
+    on a malformed value nor divide by zero on 0: 0 clamps to the
+    knob's floor, a malformed value warns and takes the default."""
+    import importlib
+
+    from snowplow_elasticsearch_loader_spark.operators import docs as docs_mod
+
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_RANK_ROWS_PER_BUCKET", "0")
+        assert importlib.reload(docs_mod)._RANK_ROWS_PER_BUCKET == 1
+        monkeypatch.setenv("SPARK_GRAFT_RANK_ROWS_PER_BUCKET", "abc")
+        with pytest.warns(UserWarning, match="not an integer"):
+            assert importlib.reload(docs_mod)._RANK_ROWS_PER_BUCKET == 20000
+    finally:
+        monkeypatch.undo()
+        importlib.reload(docs_mod)
+    assert docs_mod._RANK_ROWS_PER_BUCKET == 20000
+
+
 TRICKY = [
     "Hello Wörld ÜÖÄ",
     "my-app-üöä e-mail v2.0",

@@ -142,27 +142,76 @@ def test_badrows_routed(idx):
     assert idx.documents.select("conv_id", "turn_idx").distinct().count() == n_docs
 
 
-def test_query_engine_warm_matches_wand(spark, idx):
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted through a job
+    group (thread-local, so jobs of other threads never count)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_engine_warm_matches_wand(spark, idx, monkeypatch):
     from snowplow_elasticsearch_loader_spark.operators.query_engine import QueryEngine
 
     engine = QueryEngine(idx, CFG, warm=True)
     cold = QueryEngine(idx, CFG, warm=False)
     fast = wand.wand_topk(idx.blocks, idx.termdict, idx.corpus(), QUERIES, k=10, cfg=CFG)
     key = lambda rows: sorted((r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in rows)
-    assert key(engine.search(QUERIES, k=10).collect()) == key(fast.collect())
-    assert key(cold.search(QUERIES, k=10).collect()) == key(fast.collect())
+    expect = key(fast.collect())
+    # every engine answers point queries from the driver evaluator...
+    assert key(engine.search(QUERIES, k=10).collect()) == expect
+    assert key(cold.search(QUERIES, k=10).collect()) == expect
     # absent-only query -> empty result, no job failure
     assert engine.search([("none", "zzzz qqqq")], k=5).count() == 0
-    # serving mode (cache_blocks): the coordinator fast path gathers
-    # candidate blocks driver-side and must stay rank-identical to the
-    # distributed WAND, both cold-cache and from the per-term cache
+    # ...and cap=0 forces the distributed per-range WAND fallback
+    for eng in (engine, cold):
+        eng.driver_eval_max_blocks = 0
+        assert key(eng.search(QUERIES, k=10).collect()) == expect
+    # serving mode (cache_blocks): the coordinator fast path must stay
+    # rank-identical to the distributed WAND, both cold-cache and from
+    # the per-term cache, and over the cached blocks past the cap
     serving = QueryEngine(idx, CFG, warm=True, cache_blocks=True)
-    assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
-    assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
+    assert key(serving.search(QUERIES, k=10).collect()) == expect
+    assert key(serving.search(QUERIES, k=10).collect()) == expect
     assert serving.search([("none", "zzzz qqqq")], k=5).count() == 0
-    # cap=0 forces the distributed fallback inside serving mode
     serving.driver_eval_max_blocks = 0
-    assert key(serving.search(QUERIES, k=10).collect()) == key(fast.collect())
+    assert key(serving.search(QUERIES, k=10).collect()) == expect
+    # a non-local index (HDFS default FS) collects the termdict and
+    # gathers blocks through Spark, with the same results
+    monkeypatch.setenv("SPARK_GRAFT_DEFAULT_FS", "hdfs://x")
+    remote, n_jobs = _jobs_launched(spark, lambda: QueryEngine(idx, CFG, warm=True))
+    assert remote._bucket_files is None and remote._term_cache and n_jobs > 0
+    assert key(remote.search(QUERIES, k=10).collect()) == expect
+
+
+def test_query_engine_local_index_runs_no_spark_jobs(spark, idx):
+    """On a local index, opening an engine and serving a point search
+    (hit or absent-only) read with pyarrow and evaluate in the driver:
+    no Spark job at all, serving mode or not."""
+    from snowplow_elasticsearch_loader_spark.operators.query_engine import QueryEngine
+
+    for cache_blocks in (False, True):
+        engine, n_jobs = _jobs_launched(
+            spark, lambda: QueryEngine(idx, CFG, warm=True, cache_blocks=cache_blocks)
+        )
+        assert n_jobs == 0
+        hit, n_jobs = _jobs_launched(
+            spark, lambda: engine.search([("q", "error retry")], k=5).collect()
+        )
+        assert n_jobs == 0 and len(hit) == 5
+        assert [r["rank"] for r in hit] == [1, 2, 3, 4, 5]
+        none, n_jobs = _jobs_launched(
+            spark, lambda: engine.search([("none", "zzzz qqqq")], k=5).collect()
+        )
+        assert n_jobs == 0 and none == []
 
 
 def test_size_violation_routed(spark):
